@@ -1,22 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, must be set at session build: the default generated-
-      // class cache holds 100 entries, but this suite compiles far more
-      // distinct codegen units — with the default, the warm-up pass evicts
-      // its own classes and every TIMED query re-pays Janino+JIT (measured
-      // 16.6 s vs 2.5 s warm on t_dedup_contain)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: run each query once at the TARGET scale so the timed run
     // measures steady-state execution. A small-SF warm-up is not enough:

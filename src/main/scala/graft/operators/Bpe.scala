@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,41 +99,39 @@ object Bpe {
     * that dominates a loop over a few hundred rows. For the loop only,
     * AQE goes off and the shuffle width is sized to the symbol volume
     * (the same rows/2000 rule the rank loop uses); both settings restore
-    * in a finally. Pair counts, the (cnt desc, sym, nxt) argmax, and the
-    * merge windows are partitioning-independent, so results are
-    * unchanged on any width.
+    * on exit (GraftSession.withConf). Pair counts, the (cnt desc, sym,
+    * nxt) argmax, and the merge windows are partitioning-independent, so
+    * results are unchanged on any width.
     */
   private def learn(wf: DataFrame, rounds: Int):
       (List[(Int, String, String, Long)], DataFrame) = {
     val spark = wf.sparkSession
     // The tuning below mutates SESSION-global conf for the loop's
-    // duration (restored in the finally): any query planned concurrently
+    // duration (restored on exit): any query planned concurrently
     // on the SAME SparkSession would run at the narrowed width / without
     // AQE. Every declared gate runs its queries sequentially on one
     // session, so the assumption holds here; a deployment that shares a
     // session across threads must confine the loop to its own
     // spark.newSession() (DataFrames would need re-binding — not done
     // here because nothing in this repo runs concurrent queries).
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val pWas = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // pWas can hold a non-integer on exotic deployments ("auto" under
-      // some resource managers): fall back to the Spark default
-      learnTuned(spark, wf, rounds,
-        scala.util.Try(pWas.toInt).getOrElse(200))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", pWas)
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val syms = initialSymbols(wf).persist(StorageLevel.MEMORY_AND_DISK)
+      val nSyms = syms.count()
+      // the session width can hold a non-integer on exotic deployments
+      // ("auto" under some resource managers): fall back to the Spark default
+      val p = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        .getOrElse(200)
+      val width = math.max(1, math.min(p, (nSyms / 2000L).toInt + 1))
+      GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
+        mergeRounds(syms, rounds)
+      }
     }
   }
 
-  private def learnTuned(spark: SparkSession, wf: DataFrame, rounds: Int,
-                         p: Int): (List[(Int, String, String, Long)], DataFrame) = {
-    var syms = initialSymbols(wf).persist(StorageLevel.MEMORY_AND_DISK)
-    val nSyms = syms.count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(1, math.min(p, (nSyms / 2000L).toInt + 1)).toString)
+  /** The merge loop over a persisted, counted initial symbolization. */
+  private def mergeRounds(initial: DataFrame, rounds: Int):
+      (List[(Int, String, String, Long)], DataFrame) = {
+    var syms = initial
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     // ONE action per round (was two): the argmax over the new state
     // doubles as its persist fill — pairCounts consumes every partition

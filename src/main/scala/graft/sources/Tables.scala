@@ -25,10 +25,9 @@ object Tables {
   }
 
   private def readEvents(spark: SparkSession, path: String): DataFrame = {
-    // Spark can't represent TIMESTAMP(NANOS) natively; read the raw int64
-    // and truncate to micros. Config is session-scoped and harmless when
-    // the file is already micros.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Spark can't represent TIMESTAMP(NANOS) natively; GraftSession.tune
+    // sets nanosAsLong, so a nanos column arrives as raw int64 and is
+    // truncated to micros here. A micros file reads as a timestamp as is.
     val raw = spark.read.parquet(path)
     val tsType = raw.schema("ts").dataType.typeName
     if (tsType == "long")

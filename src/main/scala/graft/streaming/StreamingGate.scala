@@ -31,15 +31,9 @@ object StreamingGate {
 
   /** Run `body` with shuffle partitions sized to DRAIN state volume (8 --
     * ample for a gate's micro-batches; a cluster sizes this in its own
-    * conf), restoring the session setting afterwards. ONE definition:
-    * the save/set/restore block hand-copied per gate invites a missing
-    * `finally` that leaves every later batch query running at 8. */
-  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
-    val pWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", pWas)
-  }
+    * conf), restoring the session setting afterwards. */
+  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A =
+    graft.core.GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8")(body)
 
   /** Stage `df` to parquet and reopen it as a file stream (the shape real
     * ingest has: files arriving in a directory).

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bench-honesty audit: Bench times `query.count()`, and Catalyst may
@@ -19,11 +18,7 @@ object CountCollapseAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val prefix = args.lift(1).getOrElse("")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def ops(p: LogicalPlan): Map[String, Int] = {

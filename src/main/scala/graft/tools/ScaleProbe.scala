@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.core.GraftSession
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dedup-path scale probe: replicate the documents table `mult`x with
@@ -16,12 +16,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.tune(spark)
 
@@ -89,7 +85,7 @@ object ScaleProbe {
       // when-chain fixture plan, a large sequence() literal sends the
       // ANALYZER into a multi-minute DeduplicateRelations walk
       val bigFix = fix
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .crossJoin(broadcast(spark.range(mult.toLong).select(col("id").as("m"))))
         .select((col("k") + col("m") * lit(100000000L)).as("k"), col("bin"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -99,7 +95,7 @@ object ScaleProbe {
         .queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[scale] entries: $nEnt%d state records -> $nRows%d routed " +
-        f"rows in $dt%.2f s (${nEnt / dt / cpus.toInt}%.0f records/s/core)")
+        f"rows in $dt%.2f s (${nEnt / dt / cpus}%.0f records/s/core)")
       bigFix.unpersist()
       spark.stop(); return
     }
@@ -120,7 +116,7 @@ object ScaleProbe {
       // repartition the SMALL base before the explode so the md5-heavy
       // fixture encode and the replication both run on all cores
       val bigFix = fix
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(explode(sequence(lit(0L), lit(mult.toLong - 1L))).as("m"),
           col("k"), col("bin"))
         .select((col("k") + col("m") * lit(100000000L)).as("k"), col("bin"))
@@ -138,7 +134,7 @@ object ScaleProbe {
         .queryExecution.toRdd.count()
       val dtMart = (System.nanoTime() - t1) / 1e9
       println(f"[scale] xdr: $nEnv%d envelopes -> $nOps%d op rows in " +
-        f"$dtFan%.2f s (${nEnv / dtFan / cpus.toInt}%.0f envelopes/s/core " +
+        f"$dtFan%.2f s (${nEnv / dtFan / cpus}%.0f envelopes/s/core " +
         f"decode+fanout); mart ($nMart%d groups) $dtMart%.2f s")
       bigFix.unpersist()
       spark.stop(); return
@@ -793,11 +789,8 @@ object ScaleProbe {
       // almost nothing, so wall time here reflects the pre-filter's cost,
       // not the saved network volume — the spec asserts semantic equality
       // and the map-side no-exchange shape).
-      val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try {
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
         val nPlain = time("  join_plain_shuffled") {
           bigEv.join(dim, col("user_id") === col("d_user")).count()
         }
@@ -815,12 +808,6 @@ object ScaleProbe {
         }.count()
         println(f"[scale] bloom reduction: $nFacts fact rows -> $nReduced into the " +
           f"join exchange (${nFacts.toDouble / math.max(nReduced, 1)}%.1fx fewer)")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-        prevAqe match {
-          case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-          case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        }
       }
       spark.stop(); return
     }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Measured scaling curves: run a set of queries at sf0.001 / sf0.01 /
@@ -37,13 +35,9 @@ object ScalingCurves {
       .getOrElse(defaultQueries)
     val outJson = args.lift(1).getOrElse("/root/repo/target/scaling.json")
     val sfs = Seq("0.001", "0.01", "0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/classload warmup outside the measurement: one full sweep at
     // the smallest SF

@@ -18,8 +18,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession =
     GraftSession.tune(
-      GraftSession.builder("graft-test", "local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
+      GraftSession.builder(8)
         .config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_wh").toString)
         .getOrCreate())

@@ -1,12 +1,13 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** AQE-on plan stability for the hand-partitioned iteration loops.
   *
   * PageRank/HITS pin their per-round partitioning by hand and disable
-  * AQE for the loop's duration (LinkAnalysis.scala:59-72) — the
+  * AQE for the loop's duration (GraftSession.withConf in LinkAnalysis) — the
   * engine's own adaptive call, since AQE cannot see across unrolled
   * rounds. This spec pins the contract that makes that safe to run
   * inside an AQE-on session: results are BIT-IDENTICAL whether the
@@ -24,11 +25,8 @@ class AqeLoopStabilitySpec extends SparkSpec {
     (1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L), (4L, 1L),
     (5L, 4L), (5L, 2L), (2L, 5L), (6L, 1L)).toDF("src", "dst")
 
-  private def withAqe[A](on: Boolean)(body: => A): A = {
-    val was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try body finally spark.conf.set("spark.sql.adaptive.enabled", was)
-  }
+  private def withAqe[A](on: Boolean)(body: => A): A =
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> on.toString)(body)
 
   test("pageRankTopK and hitsTopK: identical rows under AQE on and off, " +
       "and the session's adaptive conf is restored after each call") {
